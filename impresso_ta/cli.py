@@ -352,15 +352,9 @@ def cmd_rebuild(args, spark) -> int:
         out = rebuild_issues_solr(
             issues, supports, ts=args.ts, default_language=args.default_language
         )
-        ok, errors = split_errors(out)
     else:
         out = rebuild_issues_passim(issues, supports)
-        ok = out.filter(~F.col("has_problem")).drop("has_problem", "error")
-        errors = out.filter(F.col("has_problem")).select(
-            F.col("id").alias("canonical_path"),
-            F.lit("rebuild").alias("stage"),
-            F.coalesce(F.col("error"), F.lit("unknown")).alias("error"),
-        )
+    ok, errors = split_errors(out)
     if args.languages:
         ok = ok.filter(F.col("lg").isin(args.languages.split(",")))
     write_rebuilt(ok, f"{args.output_dir}/rebuilt", fmt=args.store_format)

@@ -145,10 +145,13 @@ def import_issues(
     records, errors). Unpacks as a 3-tuple (issues, supports, errors)
     for print-only corpora.
 
-    One UDTF pass, no shuffle; at 100 TB the discovery frame is
-    repartitioned so each task holds a handful of issues (an issue is a
-    few MB of XML; the reference used 20 issues/partition, core.py:394 —
-    here AQE-sized input splits achieve the same without tuning).
+    One UDTF pass per job, not per sink, and no shuffle: every issue
+    crosses into Python once however many of the four frames are
+    consumed (see :func:`_split_combined`). At 100 TB the discovery
+    frame is repartitioned so each task holds a handful of issues (an
+    issue is a few MB of XML; the reference used 20 issues/partition,
+    core.py:394 — here AQE-sized input splits achieve the same without
+    tuning).
     """
     combined = discovery_df.mapInPandas(
         _import_udtf(ts), schema=IMPORT_ROW_SCHEMA
@@ -157,7 +160,27 @@ def import_issues(
 
 
 def _split_combined(combined: DataFrame) -> "ImportResult":
-    ok = combined.filter(F.col("error").isNull())
+    """Fan the combined UDTF frame out to issues, pages, records and
+    errors, parsing each issue once (ref core.py:330-527 parses once and
+    feeds every sink from that result).
+
+    The frame is lazily local-checkpointed before the split: the first
+    action on any of the four frames runs the parse and keeps every
+    partition as MEMORY_AND_DISK executor blocks (partitions that action
+    did not need are filled in by a follow-up job), and later consumers
+    read those blocks instead of re-running the parse. The blocks are
+    freed by the ContextCleaner once the frames are garbage collected.
+    ``persist`` is not used because no caller ever calls ``unpersist``
+    on an import result, so a persisted frame would stay in the session's
+    cache manager for the life of the session. On a plan with a shuffle
+    (``import_issues_distributed``) the checkpoint call itself runs the
+    shuffle map stage under AQE; that time moves out of the sinks rather
+    than being added. Like ``operators.graph``'s checkpoints, the blocks
+    are lost with their executor, and a lost block fails the consuming
+    job instead of re-parsing.
+    """
+    parsed = combined.localCheckpoint(eager=False)
+    ok = parsed.filter(F.col("error").isNull())
     issues_df = ok.select("issue.*")
     pages_df = (
         ok.filter(F.col("pages").isNotNull())
@@ -169,12 +192,12 @@ def _split_combined(combined: DataFrame) -> "ImportResult":
         .select(F.explode("records").alias("record"))
         .select("record.*")
     )
-    errors_df = combined.filter(F.col("error").isNotNull()).select(
+    errors_df = parsed.filter(F.col("error").isNotNull()).select(
         "canonical_path",
         F.lit("import").alias("stage"),
         "error",
     )
-    return ImportResult(issues_df, pages_df, records_df, errors_df)
+    return ImportResult(issues_df, pages_df, records_df, errors_df, combined)
 
 
 def _import_files_udtf(ts: Optional[str]):
@@ -342,13 +365,16 @@ def import_issues_distributed(
 class ImportResult:
     """Named result: .issues, .pages, .records, .errors. Also unpacks as
     ``issues, pages, errors = import_issues(...)`` for print-only corpora
-    (audio corpora use the named ``.records``)."""
+    (audio corpora use the named ``.records``). ``.combined`` is the
+    unsplit UDTF frame before its checkpoint, whose plan shows the parse
+    pipeline (the four frames' plans start at the checkpointed RDD)."""
 
-    def __init__(self, issues, pages, records, errors):
+    def __init__(self, issues, pages, records, errors, combined):
         self.issues = issues
         self.pages = pages
         self.records = records
         self.errors = errors
+        self.combined = combined
 
     def __iter__(self):
         return iter((self.issues, self.pages, self.errors))

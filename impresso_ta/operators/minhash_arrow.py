@@ -113,7 +113,10 @@ def minhash_signatures_arrow(
     from impresso_ta.operators.partitioning import spread_small_input
 
     # int64-overflow guard for the affine transform (see module doc)
-    assert (2 * num_perm - 1) * ((1 << 48) - 1) + _MERSENNE < (1 << 63)
+    if (2 * num_perm - 1) * ((1 << 48) - 1) + _MERSENNE >= (1 << 63):
+        raise ValueError(
+            f"num_perm={num_perm} overflows the int64 affine transform"
+        )
 
     out_schema = _sig_schema(num_perm, with_sets)
     arrow_schema = to_arrow_schema(out_schema)
@@ -152,11 +155,12 @@ def minhash_signatures_arrow(
                 # a batch whose TOTAL shingle count exceeds 2^31 would
                 # silently wrap — fail loudly instead (unreachable at
                 # default maxRecordsPerBatch; guard per ADVICE r12)
-                assert offsets[-1] < (1 << 31), (
-                    "shingle count per Arrow batch exceeds int32 list "
-                    "offsets; lower spark.sql.execution.arrow."
-                    "maxRecordsPerBatch"
-                )
+                if offsets[-1] >= (1 << 31):
+                    raise ValueError(
+                        "shingle count per Arrow batch exceeds int32 list "
+                        "offsets; lower spark.sql.execution.arrow."
+                        "maxRecordsPerBatch"
+                    )
                 arrays.append(
                     pa.ListArray.from_arrays(
                         pa.array(offsets.astype(np.int32)), pa.array(h[order])

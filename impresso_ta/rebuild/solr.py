@@ -603,7 +603,24 @@ def _rebuild_ci_udtf(
 
 def split_errors(rebuilt_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """F5: split problem-free CIs from the error channel
-    (ref: helpers.py:52-77 + rebuilder.py:206-212)."""
+    (ref: helpers.py:52-77 + rebuilder.py:206-212). Serves both rebuild
+    formats (Solr and passim share the ``has_problem``/``error`` columns).
+
+    ``rebuilt_df`` is lazily local-checkpointed before the split, so the
+    read, shuffle and assembly run once for both outputs and any later
+    action on them: the first action keeps every partition as
+    MEMORY_AND_DISK executor blocks (partitions it did not need are
+    filled in by a follow-up job) and the ContextCleaner frees them once
+    the frames are garbage collected. ``persist`` is not used because no
+    caller ever calls ``unpersist`` on the split, so a persisted frame
+    would stay in the session's cache manager for the life of the
+    session. The rebuild plan has a shuffle, so under AQE the checkpoint
+    call itself runs the shuffle map stage; that time moves out of the
+    sinks rather than being added. Like ``operators.graph``'s
+    checkpoints, the blocks are lost with their executor, and a lost
+    block fails the consuming job instead of recomputing.
+    """
+    rebuilt_df = rebuilt_df.localCheckpoint(eager=False)
     ok = rebuilt_df.filter(~F.col("has_problem")).drop("has_problem", "error")
     errors = rebuilt_df.filter(F.col("has_problem")).select(
         F.col("id").alias("canonical_path"),

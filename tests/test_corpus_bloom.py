@@ -115,3 +115,11 @@ def test_bloom_build_matches_python_twin(spark):
     # python ints are unbounded; Spark longs wrap at 2^63
     want = [v - (1 << 64) if v >= 1 << 63 else v for v in want]
     assert list(got) == want
+
+
+def test_bloom_build_rejects_unaligned_m_bits(spark):
+    """The word-aligned size guard is a real exception, so it still fires
+    under ``python -O``."""
+    df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="multiple of 64"):
+        bloom_filter_build(df, m_bits=100)

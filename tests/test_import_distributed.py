@@ -66,8 +66,14 @@ def test_distributed_import_single_byte_shuffle(spark, tmp_path):
     dist = import_issues_distributed(
         spark, base, "mets_alto", ts="2024-01-01T00:00:00Z"
     )
+    # the split frames' plans start at the fan-out's checkpointed RDD, and
+    # the checkpoint has already run the unsplit frame's adaptive plan:
+    # inspect that frame's initial (pre-reoptimization) physical plan
     plan = (
-        dist.issues._jdf.queryExecution().executedPlan().toString()
+        dist.combined._jdf.queryExecution()
+        .executedPlan()
+        .initialPlan()
+        .toString()
     )
     # one hash exchange on the bytes branch + one on the tiny election
     # branch; the election joins back via broadcast
