@@ -24,10 +24,15 @@ in any engine — the DuckDB oracles compute the identical values.
 
 from __future__ import annotations
 
+import logging
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.partitioning import spread_small_input
+
+_log = logging.getLogger("impresso_ta")
 
 # 2^31-1, a Mersenne prime — standard universal-hash modulus.
 _MERSENNE = 2147483647
@@ -586,10 +591,10 @@ def minhash_dedup_survivors(
     bands: int = 8,
     engine: str = "arrow",
 ) -> DataFrame:
-    """Linear-OUTPUT MinHash dedup: band-bucket union-find, no pairwise
-    verification. Returns every document with its duplicate component,
-    component size, and ``is_rep`` (the min-id member a dedup pass
-    keeps).
+    """Linear-OUTPUT MinHash dedup: connected components over band-bucket
+    star edges, no pairwise verification. Returns every document with its
+    duplicate component, component size, and ``is_rep`` (the min-id
+    member a dedup pass keeps).
 
     :func:`minhash_lsh_pairs` is the precision tool — exact-Jaccard
     verification over candidates — but its OUTPUT is inherently
@@ -600,15 +605,15 @@ def minhash_dedup_survivors(
     preparation doesn't need the pairs — it needs the SURVIVORS. Here
     every band bucket contributes ``|bucket| - 1`` edges to its min-id
     member (star, not clique), so edge volume is ≤ n·bands at ANY
-    duplicate distribution, and min-label propagation
-    (:func:`connected_components`, O(diameter) rounds — buckets make
-    cliques diameter ≤ 2) yields the same components the full pair set
-    would. Trade-off vs the verified form: bucket coincidence is taken
-    as duplication without an exact-Jaccard check, i.e. the standard
-    MinHash-dedup operating point (false-positive rate per dissimilar
-    pair ≈ bands·j^rows) — accepted by the large dedup pipelines this
-    mirrors (C4, SlimPajama, text-dedup) because a verify pass would
-    re-introduce the clique-quadratic cost.
+    duplicate distribution, and :func:`connected_components` (a
+    driver-side union-find under its edge bound, min-label propagation
+    above it — buckets make cliques diameter ≤ 2) yields the same
+    components the full pair set would. Trade-off vs the verified form:
+    bucket coincidence is taken as duplication without an exact-Jaccard
+    check, i.e. the standard MinHash-dedup operating point (false-positive
+    rate per dissimilar pair ≈ bands·j^rows) — accepted by the large
+    dedup pipelines this mirrors (C4, SlimPajama, text-dedup) because a
+    verify pass would re-introduce the clique-quadratic cost.
     """
     _, _, banded = _minhash_parts(
         docs, id_col, text_col, k, num_perm, bands, engine=engine
@@ -897,29 +902,80 @@ def simhash16(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     return agg.select("doc_id", sim.cast("long").alias("simhash"))
 
 
+#: Largest edge list :func:`connected_components` labels on the driver.
+#: 2^18 (a, b) pairs of Python ints are a few tens of MB — far below
+#: driver memory, and far above any near-dup graph of the corpora that
+#: reach the pairwise dedup route (< 25k docs). Larger edge lists run
+#: the distributed min-label loop.
+_LOCAL_CC_MAX_EDGES = 1 << 18
+
+
+def _min_label_union_find(a: list, b: list) -> dict:
+    """``{node: label}`` over every endpoint of the edges ``zip(a, b)``,
+    label = min node id of the node's component: union-find whose root
+    is always the smaller id, with path compression. A null endpoint is
+    a node of its own with a null label, as in the min-label loop (a
+    null never equals a join key)."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in zip(a, b):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        if u is None or v is None:
+            continue
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    return {n: find(n) for n in parent}
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iters: int = 25,
 ) -> DataFrame:
-    """Connected components over a pair list via iterative min-label
-    propagation — the dedup-cluster builder (each component = one group
-    of mutually-near-duplicate documents).
+    """Connected components over a pair list — the dedup-cluster builder
+    (each component = one group of mutually-near-duplicate documents).
+    Returns ``(node long, label long)`` for every edge endpoint, label =
+    the minimum node id of the node's component.
 
-    Algorithm: every node starts labeled with its own id; each round every
-    node adopts the minimum label among itself and its neighbors, until a
-    round changes nothing. Converges in O(component diameter) rounds —
-    near-dup clusters are dense (diameter 1-2), so 2-3 rounds in practice.
+    Bounded local solve first: the ``(a, b)`` edge frame is persisted
+    (MEMORY_AND_DISK, lazily) and ONE ``limit(_LOCAL_CC_MAX_EDGES + 1)``
+    Arrow collect looks at it — one job whatever the partition count
+    (``toArrow`` runs the limit as a single-partition exchange, where
+    ``collect`` would scan partitions in scale-up rounds of jobs). When
+    the edge list fits the bound — every near-dup graph of a corpus on
+    the pairwise dedup route does — a driver-side union-find with min-id
+    roots labels it, and the labels come back as an Arrow-built local
+    relation that downstream plans read without a job. That is one job
+    beyond the edge frame's own stages, where the loop below pays two
+    to three per round plus setup (39 on a 6-node chain).
 
-    Scale shape: the symmetrized edge list is shuffled ONCE (repartition
-    on the join key) and persisted; each round then shuffles only the
-    label frame (one long per node) for the join + min-groupBy. Lineage
-    is truncated every round with an eager localCheckpoint so the plan
-    doesn't grow with iterations (on a cluster with dynamic allocation
-    prefer ``spark.sparkContext.setCheckpointDir`` + ``checkpoint()``,
-    which survives executor loss). Driver never sees node data — the only
-    per-round action is a changed-row count.
+    Fallback, for edge lists the driver cannot hold: iterative min-label
+    propagation over the already-persisted edge frame (so no pair is
+    computed twice). Every node starts labeled with its own id; each
+    round every node adopts the minimum label among itself and its
+    neighbors, until a round changes nothing — O(component diameter)
+    rounds, 2-3 for dense near-dup clusters. A loop that has not
+    converged after ``max_iters`` rounds raises instead of returning
+    partly propagated labels. The symmetrized edge list is shuffled ONCE
+    (repartition on the join key) and persisted; each round shuffles
+    only the label frame for the join + min-groupBy, and truncates
+    lineage with a lazy localCheckpoint (on a cluster with dynamic
+    allocation prefer ``setCheckpointDir`` + ``checkpoint()``, which
+    survives executor loss). The only per-round action is a changed-row
+    count.
 
     This is the equi-join formulation of the map-reduce CC algorithms
     (cf. Kiveris et al., "Connected Components in MapReduce and Beyond"):
@@ -927,53 +983,95 @@ def connected_components(
     right tradeoff when components are small and dense (dedup clusters)
     — fewer rounds, no edge-list rewriting.
     """
+    import pyarrow as pa
+
     e = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
+    ).persist(StorageLevel.MEMORY_AND_DISK)
+    head = e.limit(_LOCAL_CC_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= _LOCAL_CC_MAX_EDGES:
+        found = _min_label_union_find(
+            head.column("a").to_pylist(), head.column("b").to_pylist()
+        )
+        labels = edges.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "node": pa.array(list(found), pa.int64()),
+                    "label": pa.array(list(found.values()), pa.int64()),
+                }
+            ),
+            "node long, label long",
+        )
+        e.unpersist()
+        _log.debug(
+            "connected_components: %d edges, route=local, rounds=0",
+            head.num_rows,
+        )
+        return labels
+    del head
     sym = (
         e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .repartition("b")
         .persist()
     )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
+    try:
+        labels = (
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        for rounds in range(1, max_iters + 1):
+            neigh = (
+                sym.join(
+                    labels.select(
+                        F.col("node").alias("b_node"), F.col("label")
+                    ),
+                    sym["b"] == F.col("b_node"),
+                )
+                .groupBy("a")
+                .agg(F.min("label").alias("neigh_label"))
+            )
+            updated = (
+                labels.join(
+                    neigh.withColumnRenamed("a", "node"), "node", "left"
+                )
+                .select(
+                    "node",
+                    F.col("label").alias("old_label"),
+                    F.least(
+                        F.col("label"),
+                        F.coalesce("neigh_label", F.col("label")),
+                    ).alias("label"),
+                )
+                # LAZY — the changed-row count right below is the
+                # round's action; it computes the round AND materializes
+                # the checkpoint blocks in one job (the eager form paid
+                # a separate materialization job per round). Logical-
+                # plan truncation is identical (LogicalRDD boundary
+                # either way).
+                .localCheckpoint(eager=False)
+            )
+            changed = updated.filter(
+                F.col("label") < F.col("old_label")
+            ).count()
+            labels = updated.select("node", "label")
+            if changed == 0:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iters} "
+                "rounds"
+            )
+    finally:
+        sym.unpersist()
+        e.unpersist()
+    _log.debug(
+        "connected_components: >%d edges, route=loop, rounds=%d",
+        _LOCAL_CC_MAX_EDGES,
+        rounds,
     )
-    for _ in range(max_iters):
-        neigh = (
-            sym.join(
-                labels.select(
-                    F.col("node").alias("b_node"), F.col("label")
-                ),
-                sym["b"] == F.col("b_node"),
-            )
-            .groupBy("a")
-            .agg(F.min("label").alias("neigh_label"))
-        )
-        updated = (
-            labels.join(neigh.withColumnRenamed("a", "node"), "node", "left")
-            .select(
-                "node",
-                F.col("label").alias("old_label"),
-                F.least(
-                    F.col("label"), F.coalesce("neigh_label", F.col("label"))
-                ).alias("label"),
-            )
-            # r13: LAZY — the changed-row count right below is the
-            # round's action; it computes the round AND materializes
-            # the checkpoint blocks in one job (the eager form paid a
-            # separate materialization job per round). Logical-plan
-            # truncation is identical (LogicalRDD boundary either way).
-            .localCheckpoint(eager=False)
-        )
-        changed = updated.filter(F.col("label") < F.col("old_label")).count()
-        labels = updated.select("node", "label")
-        if changed == 0:
-            break
-    sym.unpersist()
     return labels
 
 

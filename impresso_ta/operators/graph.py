@@ -1,10 +1,11 @@
 """Distributed graph operators: connected components and PageRank.
 
 The reference has no graph engine, but its entity-resolution shape —
-cluster documents/records that share evidence (the union-find inside
-``dedup.minhash_dedup_survivors``) — IS connected components over an
-edge table. This module generalizes that to any edge DataFrame with the
-two algorithms that actually survive 100 TB:
+cluster documents/records that share evidence (``dedup.dedup_clusters``,
+which ``dedup.minhash_dedup_survivors`` feeds its band-bucket edges) —
+IS connected components over an edge table. This module generalizes that
+to any edge DataFrame with the two algorithms that actually survive
+100 TB:
 
 * ``connected_components`` — alternating Large-Star / Small-Star
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -13,8 +14,10 @@ two algorithms that actually survive 100 TB:
   — unlike naive hash-min label propagation, whose round count is the
   graph DIAMETER (a 1M-hop chain takes 1M rounds of full-edge
   shuffles). No ``collect()``, no driver-side union-find: the edge set
-  never leaves the cluster, so it scales past the driver-memory
-  ceiling that bounds ``minhash_dedup_survivors``'s collected edges.
+  never leaves the cluster at any size. ``dedup.connected_components``
+  instead labels edge lists under its driver bound with a local
+  union-find and falls back to O(diameter) min-label propagation above
+  it.
 
 * ``pagerank`` — fixed-iteration power method kept in EXACT BIGINT
   arithmetic (ranks scaled by 1e12; per-edge contribution is integer
@@ -103,8 +106,8 @@ def connected_components(
 
     Returns (node BIGINT, component BIGINT) where component is the
     MINIMUM node id in the node's component — the same canonical-label
-    contract as ``dedup.minhash_dedup_survivors``'s union-find, engine-
-    portable by construction (an oracle computes the same min over a
+    contract as ``dedup.connected_components``, engine-portable by
+    construction (an oracle computes the same min over a
     recursive transitive closure).
 
     Node universe = edge endpoints. Isolated nodes (no surviving edge

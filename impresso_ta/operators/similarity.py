@@ -25,10 +25,15 @@ and prune columns to (id, vector) at the scan.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.partitioning import spread_small_input
+
+_log = logging.getLogger("impresso_ta")
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -78,7 +83,11 @@ def _brute_engine_auto(corpus: DataFrame) -> str:
             str(corpus._jdf.queryExecution().optimizedPlan().stats()
                 .sizeInBytes())
         )
-    except Exception:
+    except (AttributeError, Py4JError) as exc:
+        _log.warning(
+            "_brute_engine_auto: no plan size estimate (%r); routing to arrow",
+            exc,
+        )
         return "arrow"
     thr = int(
         corpus.sparkSession.conf.get(

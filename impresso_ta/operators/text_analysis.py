@@ -9,9 +9,14 @@ the DuckDB oracles express the identical semantics.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+_log = logging.getLogger("impresso_ta")
 
 # Tiny per-language marker sets for the n-gram/stopword heuristic.
 # Deterministic and engine-portable; ties break alphabetically.
@@ -521,7 +526,11 @@ def _lm_engine_auto(docs: DataFrame) -> str:
             str(docs._jdf.queryExecution().optimizedPlan().stats()
                 .sizeInBytes())
         )
-    except Exception:
+    except (AttributeError, Py4JError) as exc:
+        _log.warning(
+            "_lm_engine_auto: no plan size estimate (%r); routing to arrow",
+            exc,
+        )
         return "arrow"
     thr = int(
         docs.sparkSession.conf.get(

@@ -3520,9 +3520,11 @@ _CLUSTERS_ORACLE = (
 @q(
     "dedup_clusters",
     _CLUSTERS_ORACLE,
-    "Near-dup clusters: connected components (iterative min-label "
-    "propagation, O(diameter) rounds, one persisted edge shuffle) over "
-    "the 3-gram Jaccard pair list; canonical representative = min id. "
+    "Near-dup clusters: connected components (one bounded edge collect "
+    "+ driver-side min-id union-find; above 2^18 edges, iterative "
+    "min-label propagation over the persisted edges, O(diameter) "
+    "rounds) over the 3-gram Jaccard pair list; canonical "
+    "representative = min id. "
     "Oracle: DuckDB recursive CTE over the same pair SQL.",
 )
 def dedup_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7471,9 +7473,9 @@ _GRAPH_CC_EDGES_SQL = """
     """,
     "Connected components via alternating Large-Star/Small-Star "
     "(Kiveris et al. SoCC'14): O(log n) window-aggregate rounds "
-    "regardless of component diameter, edge set never collected — the "
-    "distributed generalization of the union-find inside "
-    "minhash_dedup_survivors (which collects its edges driver-side). "
+    "regardless of component diameter, edge set never collected at any "
+    "size (unlike dedup.connected_components, which labels edge lists "
+    "under its driver bound with a local union-find). "
     "Labels = min node id per component, engine-portable by contract; "
     "the oracle computes the same min over a recursive transitive "
     "closure (fine at sf0.01, quadratic-in-component — exactly why the "

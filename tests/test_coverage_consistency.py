@@ -37,3 +37,20 @@ def test_all_registry_queries_have_oracles():
 
     qs, oracles = e.queries(), e.oracle_sql()
     assert set(qs) == set(oracles)
+
+
+def test_preflight_counts_reference_skips():
+    from tools.preflight import reference_skips
+
+    lines = [
+        "497 passed, 59 skipped in 900.00s\n",
+        "SKIPPED [3] tests/test_importer_ina.py:94: reference sample data "
+        "not available\n",
+        "SKIPPED [1] tests/test_rebuild_ci_level.py:98: reference canonical "
+        "outputs absent\n",
+        "SKIPPED [2] tests/test_pdf_ocr.py:12: tesseract not installed\n",
+        "tests/test_x.py::test_y SKIPPED (reference sample data not "
+        "available)\n",
+    ]
+    assert reference_skips(lines) == 4
+    assert reference_skips([]) == 0

@@ -6,6 +6,8 @@ broadcasting, aggregations combining map-side, and the operators that
 advertise "zero shuffle" actually having zero exchanges.
 """
 
+import logging
+
 from pyspark.sql import functions as F
 
 from impresso_ta.operators.dedup import minhash_signatures
@@ -118,6 +120,19 @@ def test_cosine_topk_auto_routes_by_corpus_size(spark):
         assert "MapInArrow" in _plan(cosine_topk(e, qs, k=3))
     finally:
         spark.conf.unset(key)
+
+
+def test_size_routers_warn_when_estimate_unavailable(caplog):
+    # no plan statistics → the arrow route, and the fallback is logged
+    from impresso_ta.operators.similarity import _brute_engine_auto
+    from impresso_ta.operators.text_analysis import _lm_engine_auto
+
+    caplog.set_level(logging.WARNING, logger="impresso_ta")
+    assert _brute_engine_auto(object()) == "arrow"
+    assert _lm_engine_auto(object()) == "arrow"
+    msgs = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+    assert any(m.startswith("_brute_engine_auto: no plan size") for m in msgs)
+    assert any(m.startswith("_lm_engine_auto: no plan size") for m in msgs)
 
 
 def test_multi_join_queries_broadcast_everything(spark):

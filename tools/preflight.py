@@ -6,7 +6,9 @@ one brittle plan assertion shipped red.  This gate makes that impossible to
 do silently.  Run it before ANY end-of-round / snapshot commit:
 
     python tools/preflight.py            # fast gate (consistency + new queries)
-    python tools/preflight.py --full     # + the whole pytest suite
+    python tools/preflight.py --full     # + the whole pytest suite, and
+                                         #   the count of tests skipped
+                                         #   for missing reference data
 
 Fast gate =
   1. ``pytest -q tests/test_coverage_consistency.py`` — every registry query
@@ -118,6 +120,24 @@ def newest_check_snapshot() -> tuple[str | None, set[str]]:
     return latest, set(data.get("queries", data).keys())
 
 
+#: Skip reasons of tests gated on reference data absent from the host.
+REFERENCE_SKIP_REASONS = (
+    "reference sample data not available",
+    "reference canonical outputs absent",
+)
+
+
+def reference_skips(lines) -> int:
+    """Tests skipped for missing reference data, from pytest ``-rs``
+    summary lines (``SKIPPED [N] path:line: reason``)."""
+    n = 0
+    for line in lines:
+        m = re.match(r"SKIPPED \[(\d+)\] (.*)", line)
+        if m and any(r in m.group(2) for r in REFERENCE_SKIP_REASONS):
+            n += int(m.group(1))
+    return n
+
+
 def main() -> int:
     full = "--full" in sys.argv
 
@@ -182,9 +202,19 @@ def main() -> int:
 
     if full:
         print("[preflight 3/3] full pytest suite (--full)")
-        r = subprocess.run([sys.executable, "-m", "pytest", "-q", "tests/"],
-                           cwd=REPO)
-        if r.returncode != 0:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "pytest", "-q", "-rs", "tests/"],
+            cwd=REPO, stdout=subprocess.PIPE, text=True,
+        )
+        lines = []
+        for line in proc.stdout:
+            print(line, end="")
+            lines.append(line)
+        n_ref = reference_skips(lines)
+        print(f"[preflight 3/3] {n_ref} test(s) skipped for missing "
+              "reference data"
+              + (" — their golden-output checks did not run" if n_ref else ""))
+        if proc.wait() != 0:
             print("PREFLIGHT FAIL: pytest red")
             return 1
     else:
